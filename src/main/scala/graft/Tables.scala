@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -14,6 +16,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and prunes columns into the file source; at cluster scale the same
   * loaders work unchanged against a partitioned table root because the
   * path is the only binding.
+  *
+  * Every parquet read in graft goes through [[readParquet]], which
+  * infers each input's schema once. A plain `spark.read.parquet(path)`
+  * launches a Spark job to read parquet footers before the query's own
+  * plan runs; for a short report over an unchanged table that job is a
+  * large share of the request. The cache key is the session, the
+  * session's parquet confs (`spark.sql.parquet.*` and
+  * `spark.sql.legacy.parquet.*`), the ordered path list, and a file
+  * stamp: (path, length, mtime) of every file under the paths, so any
+  * rewrite, append or delete misses. A hit passes the schema Spark
+  * inferred for that same file set back to `spark.read.schema`, so
+  * plans and results are unchanged. The stamp walks the tree with
+  * `listStatus`, not `listFiles`: on the local file system `listFiles`
+  * loads every file's permissions (one `ls` process per file without
+  * the native Hadoop library), which on a 16-bucket mart costs more
+  * than the inference job it would save.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -46,7 +64,7 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else checked(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    else checked(name, readParquet(spark, s"$sfDir/$name.parquet"))
 
   /** Register every table as a temp view (plus graft's native SQL
     * functions), making the whole engine reachable from `spark.sql`:
@@ -62,7 +80,7 @@ object Tables {
   }
 
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    readParquet(spark, s"$sfDir/events.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -115,19 +133,14 @@ object Tables {
     * per query for a number the file footers already hold. */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
     // recursive: partitioned datasets nest their files under
     // key=value directories
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    if (fs.getFileStatus(p).isFile) files += fs.getFileStatus(p)
-    else {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) files += f
-      }
-    }
+    val st = fs.getFileStatus(p)
+    val files =
+      if (st.isFile) Seq(st)
+      else filesUnder(fs, p).filter(_.getPath.getName.endsWith(".parquet"))
     // fail fast: a silent 0 would make trainingSample pass the WHOLE
     // corpus to a fit (n <= cap) — the exact failure the cap prevents
     require(files.nonEmpty, s"no parquet files under $path — cannot derive row count")
@@ -145,4 +158,86 @@ object Tables {
   /** Documents cardinality via footer metadata (no scan). */
   def documentsCount(s: SparkSession, d: String): Long =
     parquetRowCount(s, s"$d/documents.parquet")
+
+  /** `spark.read.parquet(paths: _*)`, with the schema inferred once
+    * per unchanged file set (see the object doc). A path that does not
+    * exist or holds glob characters takes the plain read, so Spark's
+    * own errors and glob expansion are unchanged. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    fileStamp(spark, paths) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(stamp) =>
+        val key = SchemaKey(parquetConfs(spark), paths.toList)
+        cachedSchema(spark, key, stamp) match {
+          case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+          case None =>
+            val df = spark.read.parquet(paths: _*)
+            storeSchema(spark, key, stamp, df.schema)
+            df
+        }
+    }
+
+  /** Distinct path lists remembered per session (LRU beyond that). */
+  private[graft] val SchemaCacheEntries = 64
+
+  private final case class SchemaKey(confs: List[(String, String)], paths: List[String])
+  private type Stamp = Seq[(String, Long, Long)]
+
+  private final class SchemaLru
+      extends java.util.LinkedHashMap[SchemaKey, (Stamp, StructType)](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, (Stamp, StructType)]): Boolean =
+      size() > SchemaCacheEntries
+  }
+
+  // weak keys: a stopped, unreferenced session drops its entries.
+  // Synchronized: CacheScope.pool threads load tables concurrently.
+  private val schemaCache = new java.util.WeakHashMap[SparkSession, SchemaLru]()
+
+  private def cachedSchema(spark: SparkSession, key: SchemaKey,
+                           stamp: Stamp): Option[StructType] =
+    schemaCache.synchronized {
+      Option(schemaCache.get(spark)).flatMap(lru => Option(lru.get(key)))
+        .collect { case (s, schema) if s == stamp => schema }
+    }
+
+  private def storeSchema(spark: SparkSession, key: SchemaKey, stamp: Stamp,
+                          schema: StructType): Unit =
+    schemaCache.synchronized {
+      schemaCache.computeIfAbsent(spark, _ => new SchemaLru).put(key, (stamp, schema))
+      ()
+    }
+
+  /** Entries cached for `spark` (specs pin the LRU bound with it). */
+  private[graft] def schemaCacheSize(spark: SparkSession): Int =
+    schemaCache.synchronized(Option(schemaCache.get(spark)).fold(0)(_.size))
+
+  private def parquetConfs(spark: SparkSession): List[(String, String)] =
+    spark.conf.getAll.iterator.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.toList.sorted
+
+  // the characters Hadoop's glob syntax expands (as Spark checks them)
+  private val GlobChars: Set[Char] = "{}[]*?\\".toSet
+
+  /** (path, length, mtime) of every file under `paths`, in path order;
+    * None when the plain read must handle them: a glob, or a path that
+    * does not exist or cannot be listed. */
+  private def fileStamp(spark: SparkSession, paths: Seq[String]): Option[Stamp] =
+    if (paths.exists(_.exists(GlobChars))) None
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      try Some(paths.flatMap { path =>
+        val p = new Path(path)
+        filesUnder(p.getFileSystem(conf), p)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      }) catch { case _: java.io.IOException => None }
+    }
+
+  /** Every file under `p` (`p` itself if it is a file), by a recursive
+    * `listStatus` walk. */
+  private def filesUnder(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st)
+    }
 }

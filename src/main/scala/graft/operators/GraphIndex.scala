@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.queries.Pipeline
+import graft.Tables
 
 /** Persisted graph ANN index — s16/s20's deployment story (build
   * once, probe many), completing the persisted-index ladder:
@@ -55,7 +56,7 @@ object GraphIndex {
 
   /** The frozen centroid matrix (k rows — bounded driver collect). */
   private def readCents(s: SparkSession, path: String): Array[Array[Double]] =
-    s.read.parquet(s"$path/cells")
+    Tables.readParquet(s, s"$path/cells")
       .select(col("cluster"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_._1).map(_._2.toArray)
@@ -69,9 +70,9 @@ object GraphIndex {
     import s.implicits._
     if (delta.isEmpty) return
     val cents = readCents(s, path)
-    val assigned = s.read.parquet(s"$path/assigned")
-    val edges = s.read.parquet(s"$path/edges")
-    val piv = s.read.parquet(s"$path/pivots")
+    val assigned = Tables.readParquet(s, s"$path/assigned")
+    val edges = Tables.readParquet(s, s"$path/edges")
+    val piv = Tables.readParquet(s, s"$path/pivots")
     val (deltaAsg, rewritten, _, mergedPiv) =
       Pipeline.graphAppendFrames(assigned, edges, piv, delta, cents)
     // k-row pivot frame stages through the driver; the rewritten edge
@@ -110,10 +111,10 @@ object GraphIndex {
   def compact(s: SparkSession, path: String): Unit = {
     import s.implicits._
     if (!IndexIo.exists(s, s"$path/tombstones")) return
-    val assigned = s.read.parquet(s"$path/assigned")
-    val edges = s.read.parquet(s"$path/edges")
-    val piv = s.read.parquet(s"$path/pivots")
-    val tomb = s.read.parquet(s"$path/tombstones")
+    val assigned = Tables.readParquet(s, s"$path/assigned")
+    val edges = Tables.readParquet(s, s"$path/edges")
+    val piv = Tables.readParquet(s, s"$path/pivots")
+    val tomb = Tables.readParquet(s, s"$path/tombstones")
     if (tomb.isEmpty) { IndexIo.delete(s, s"$path/tombstones"); return }
     val (surv, rewritten, _, affCells, newPiv) =
       Pipeline.graphCompactFrames(assigned, edges, piv, tomb)
@@ -138,7 +139,7 @@ object GraphIndex {
     if (!IndexIo.exists(s, s"$path/tombstones")) emb
     else emb.join(
       org.apache.spark.sql.functions.broadcast(
-        s.read.parquet(s"$path/tombstones").withColumnRenamed("cand_id", "vec_id")),
+        Tables.readParquet(s, s"$path/tombstones").withColumnRenamed("cand_id", "vec_id")),
       Seq("vec_id"), "left_anti")
 
   /** Fixed-horizon (s16) graph search over the loaded frames.
@@ -147,8 +148,8 @@ object GraphIndex {
   def probe(s: SparkSession, path: String, emb: DataFrame,
             queries: DataFrame, k: Int): DataFrame =
     Pipeline.graphProbe(
-      s.read.parquet(s"$path/edges").select(col("a_id"), col("b_id")),
-      s.read.parquet(s"$path/pivots"),
+      Tables.readParquet(s, s"$path/edges").select(col("a_id"), col("b_id")),
+      Tables.readParquet(s, s"$path/pivots"),
       queries.select(col("q_id"), col("q_vec")), liveEmb(s, path, emb), k)
 
   /** Greedy beam (s20) search over the loaded frames. */
@@ -156,8 +157,8 @@ object GraphIndex {
                 queries: DataFrame, k: Int, beam: Int = 4,
                 rounds: Int = 3): DataFrame =
     Pipeline.beamProbe(
-      s.read.parquet(s"$path/edges").select(col("a_id"), col("b_id")),
-      s.read.parquet(s"$path/pivots"),
+      Tables.readParquet(s, s"$path/edges").select(col("a_id"), col("b_id")),
+      Tables.readParquet(s, s"$path/pivots"),
       queries.select(col("q_id"), col("q_vec")), liveEmb(s, path, emb),
       k, beam, rounds)
 }

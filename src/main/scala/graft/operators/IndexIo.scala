@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import graft.Tables
 
 /** Filesystem plumbing shared by the persisted index classes
   * (RangeIvfIndex, PqIndex, GraphIndex). Everything goes through the
@@ -25,7 +26,7 @@ private[operators] object IndexIo {
     * anti-join on the uniform cand_id key; absent dir = identity). */
   def minusTombstones(s: SparkSession, root: String, df: DataFrame): DataFrame =
     if (!exists(s, s"$root/tombstones")) df
-    else df.join(broadcast(s.read.parquet(s"$root/tombstones")),
+    else df.join(broadcast(Tables.readParquet(s, s"$root/tombstones")),
       Seq("cand_id"), "left_anti")
 
   /** Swap a fully-written staged directory into the live slot without
@@ -69,7 +70,7 @@ private[operators] object IndexIo {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val old = s.conf.getOption(key)
     s.conf.set(key, "dynamic")
-    try s.read.parquet(stageDir)
+    try Tables.readParquet(s, stageDir)
       .write.mode("overwrite").partitionBy(partCol).parquet(liveDir)
     finally old match {
       case Some(v) => s.conf.set(key, v)

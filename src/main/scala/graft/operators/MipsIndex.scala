@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
 import graft.queries.Pipeline
+import graft.Tables
 
 /** Persisted MIPS index — s09's augmentation reduction made a
   * build-once artifact. The build appends sqrt(M² − ‖x‖²) to every
@@ -52,9 +53,9 @@ object MipsIndex {
     * the literal zero happens here, map-side. */
   def probe(s: SparkSession, path: String, queries: DataFrame,
             k: Int, seedCells: Int = 3): DataFrame = {
-    val cands = s.read.parquet(s"$path/assigned")
-    val cellMeta = s.read.parquet(s"$path/cells")
-    val c = s.read.parquet(s"$path/consts").head()
+    val cands = Tables.readParquet(s, s"$path/assigned")
+    val cellMeta = Tables.readParquet(s, s"$path/cells")
+    val c = Tables.readParquet(s, s"$path/consts").head()
     val (maxAugNorm, minAugNorm) =
       (math.sqrt(c.getAs[Double]("max_aug_n2")), math.sqrt(c.getAs[Double]("min_aug_n2")))
     val qs = queries

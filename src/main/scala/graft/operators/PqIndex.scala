@@ -7,6 +7,7 @@ import graft.queries.Pipeline
 
 /* (lifecycle ops use a couple more functions) */
 import org.apache.spark.sql.functions.element_at
+import graft.Tables
 
 /** Persisted product-quantization index — the s04/s05 deployment
   * story (build once, probe many), extending the RangeIvfIndex
@@ -63,11 +64,11 @@ object PqIndex {
     * frame. */
   def readFit(s: SparkSession, path: String):
       (Array[Array[Double]], Seq[Seq[Seq[Double]]]) = {
-    val cents = s.read.parquet(s"$path/cells")
+    val cents = Tables.readParquet(s, s"$path/cells")
       .select(col("cluster"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_._1).map(_._2.toArray)
-    val cbs = toMatrix(s.read.parquet(s"$path/codebooks")
+    val cbs = toMatrix(Tables.readParquet(s, s"$path/codebooks")
       .select(col("m"), col("code"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))))
     (cents, cbs)
@@ -77,7 +78,7 @@ object PqIndex {
   def read(s: SparkSession, path: String):
       (DataFrame, Array[Array[Double]], Seq[Seq[Seq[Double]]]) = {
     val (cents, cbs) = readFit(s, path)
-    (s.read.parquet(s"$path/codes"), cents, cbs)
+    (Tables.readParquet(s, s"$path/codes"), cents, cbs)
   }
 
   /** Delta-append under FROZEN fits (s12's maintenance contract,
@@ -131,7 +132,7 @@ object PqIndex {
     * before and after are spec-proven identical (IndexSpec). */
   def compact(s: SparkSession, path: String): Unit = {
     if (!IndexIo.exists(s, s"$path/tombstones")) return
-    live(s, path, s.read.parquet(s"$path/codes"))
+    live(s, path, Tables.readParquet(s, s"$path/codes"))
       .write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$path/codes_compact")
     IndexIo.swapIn(s, s"$path/codes", s"$path/codes_compact")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Persisted form of the s07 IVF range-search index (reference role:
   * the reusable vector index a warehouse deployment keeps next to the
@@ -39,8 +40,8 @@ object RangeIvfIndex {
   /** Load the two index frames. The assigned frame's scan carries the
     * cluster partition column; cells is broadcast-sized by design. */
   def read(s: SparkSession, path: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/assigned"),
-     s.read.parquet(s"$path/cells"))
+    (Tables.readParquet(s, s"$path/assigned"),
+     Tables.readParquet(s, s"$path/cells"))
 
   /** Append a delta batch of (vec_id, embedding) vectors to a
     * persisted index WITHOUT a refit — the maintenance operation an
@@ -60,7 +61,7 @@ object RangeIvfIndex {
     * admission bound only requires each member to be counted in its
     * assigned cell's radius, which the merge guarantees. */
   def append(s: SparkSession, path: String, delta: DataFrame): Unit = {
-    val cells = s.read.parquet(s"$path/cells")
+    val cells = Tables.readParquet(s, s"$path/cells")
       .orderBy(col("cluster")).collect()
     val ids = cells.map(_.getInt(0))
     val cents = cells.map(_.getSeq[Double](1).toArray)
@@ -75,7 +76,7 @@ object RangeIvfIndex {
       .select(col("vec_id").as("cand_id"), col("embedding"), col("cluster"))
     assignedDelta.write.mode("append").partitionBy("cluster")
       .parquet(s"$path/assigned")
-    val cellsDf = s.read.parquet(s"$path/cells")
+    val cellsDf = Tables.readParquet(s, s"$path/cells")
     val deltaMins = assignedDelta
       .join(broadcast(cellsDf.select(col("cluster"), col("cv"))), "cluster")
       .groupBy(col("cluster"))
@@ -120,11 +121,11 @@ object RangeIvfIndex {
     * before and after are spec-proven identical (IndexSpec). */
   def compact(s: SparkSession, path: String): Unit = {
     if (!IndexIo.exists(s, s"$path/tombstones")) return
-    val survivors = live(s, path, s.read.parquet(s"$path/assigned"))
+    val survivors = live(s, path, Tables.readParquet(s, s"$path/assigned"))
     survivors.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$path/assigned_compact")
-    val cellsDf = s.read.parquet(s"$path/cells")
-    val newMins = s.read.parquet(s"$path/assigned_compact")
+    val cellsDf = Tables.readParquet(s, s"$path/cells")
+    val newMins = Tables.readParquet(s, s"$path/assigned_compact")
       .join(broadcast(cellsDf.select(col("cluster"), col("cv"))), "cluster")
       .groupBy(col("cluster"))
       .agg(min(graft.functions.VectorFunctions.cosine(col("embedding"), col("cv")))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.Tables
 
 /** Ingest ETL surface mirroring RDW's pipeline (reference
   * /root/reference/docs/Architecture.md "Exam Processor" /
@@ -375,7 +376,7 @@ object Ingest {
     */
   def forTenant(spark: SparkSession, path: String, tenantCol: String,
                 tenant: String): DataFrame =
-    spark.read.parquet(path).filter(col(tenantCol) === tenant)
+    Tables.readParquet(spark, path).filter(col(tenantCol) === tenant)
 
   /** Strict-header CSV contract (RDW student-group import: the file
     * must carry the exact documented header set, reference
@@ -470,7 +471,7 @@ object Ingest {
     * that day's files). */
   def readArchive(spark: SparkSession, archiveRoot: String, entity: String,
                   date: Option[String] = None): DataFrame = {
-    val all = spark.read.parquet(s"$archiveRoot/$entity")
+    val all = Tables.readParquet(spark, s"$archiveRoot/$entity")
     date.fold(all)(dt => all.filter(col("dt") === dt))
   }
 
@@ -500,7 +501,7 @@ object Ingest {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val bytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).coalesce(nOut)
+    Tables.readParquet(spark, inDir).coalesce(nOut)
       .write.mode("overwrite").parquet(outDir)
     val after = fs.listStatus(new org.apache.hadoop.fs.Path(outDir)).toSeq
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.Tables
 
 /** Structured Streaming jobs mirroring the batch semantics of
   * e01/e02 in [[graft.queries.Pipeline]] (RDW's exam-event ingest
@@ -1016,17 +1017,19 @@ object StreamingJobs {
           else delta.select(bucketExpr(keys, nBuckets).as("_b"))
             .distinct().collect().map(_.getInt(0)).toSet
         val bucketMap = manifest.map(_.buckets).getOrElse(Map.empty[Int, String])
+        // sorted like martFrame's list, so a batch touching every
+        // bucket reuses the schema the last mart read cached
         val curPaths =
           (if (rebucket) bucketMap.values.toSeq
-           else touched.toSeq.sorted.flatMap(bucketMap.get))
-            .distinct.map(d => s"$martRoot/$d")
+           else touched.toSeq.flatMap(bucketMap.get))
+            .distinct.sorted.map(d => s"$martRoot/$d")
         val ordering = Seq(col(versionCol).desc, col(tieBreakCol).desc)
         // the published mart carries only survivors (the deleted column
         // is dropped at merge time) — every mart row is alive, so it
         // re-enters the merge with deleted = false
         val current =
           if (curPaths.isEmpty) delta.limit(0)
-          else sp.read.parquet(curPaths: _*).withColumn("deleted", lit(false))
+          else Tables.readParquet(sp, curPaths: _*).withColumn("deleted", lit(false))
         val merged = graft.operators.Operators.migrateWithDeletes(
           current, delta, keys.map(col), ordering)
         merged.withColumn("_b", bucketExpr(keys, nBuckets))
@@ -1092,7 +1095,7 @@ object StreamingJobs {
   private def martFrame(spark: SparkSession, martRoot: String,
                         m: MartManifest): Option[DataFrame] = {
     val dirs = m.buckets.values.toSeq.distinct.sorted.map(d => s"$martRoot/$d")
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None else Some(Tables.readParquet(spark, dirs: _*))
   }
 
   /** The last applied snapshot name the manifest records, if any. */
@@ -1534,13 +1537,14 @@ object StreamingJobs {
           else delta.select(bucketExpr(keys, nBuckets).as("_b"))
             .distinct().collect().map(_.getInt(0)).toSet
         val bucketMap = manifest.map(_.buckets).getOrElse(Map.empty[Int, String])
+        // in martFrame's order (see applyMigrateBatch)
         val curPaths =
           (if (rebucket) bucketMap.values.toSeq
-           else touched.toSeq.sorted.flatMap(bucketMap.get))
-            .distinct.map(d => s"$martRoot/$d")
+           else touched.toSeq.flatMap(bucketMap.get))
+            .distinct.sorted.map(d => s"$martRoot/$d")
         val merged =
           if (curPaths.isEmpty) delta
-          else sp.read.parquet(curPaths: _*).unionByName(delta)
+          else Tables.readParquet(sp, curPaths: _*).unionByName(delta)
             .groupBy(keys.map(col): _*)
             .agg(sum(col("sum_dec")).cast(DecimalType(30, 2)).as("sum_dec"),
               sum(col("n_rows")).as("n_rows"))

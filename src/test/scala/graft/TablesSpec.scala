@@ -49,12 +49,22 @@ class TablesSpec extends SparkSpec {
   }
 
   test("schema drift fails fast with a named column list") {
-    val bad = Tables.orders(spark, sfDir).drop("o_totalprice")
-    val e = intercept[IllegalArgumentException] {
-      // simulate a reload check on a dataframe missing a column
-      val missing = Tables.expectedColumns("orders").filterNot(bad.columns.contains)
-      require(missing.isEmpty, s"table orders is missing expected columns: $missing")
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    Tables.orders(spark, sfDir).drop("o_totalprice")
+      .write.parquet(s"$dir/orders.parquet")
+    val e = intercept[IllegalArgumentException](Tables.load(spark, dir, "orders"))
+    assert(e.getMessage.contains("o_totalprice"))
+  }
+
+  test("a table rewritten in place is checked again, not served from the schema cache") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val path = s"$dir/orders.parquet"
+    val orders = Tables.orders(spark, sfDir)
+    orders.write.parquet(path)
+    // the second load is served from the cached schema
+    Seq.fill(2)(assert(Tables.load(spark, dir, "orders").columns.contains("o_totalprice")))
+    orders.drop("o_totalprice").write.mode("overwrite").parquet(path)
+    val e = intercept[IllegalArgumentException](Tables.load(spark, dir, "orders"))
     assert(e.getMessage.contains("o_totalprice"))
   }
 }
