@@ -61,11 +61,15 @@ object CacheScope {
     * local blocks, no write amplification. `spark.graft.checkpoint.
     * reliable=true|false` overrides the auto-dispatch either way.
     *
-    * Unlike `cached`, the blocks behind a checkpointed frame are NOT
-    * in the SQL cache (clearCache() cannot see them) and are
-    * otherwise freed only when GC + ContextCleaner get to the RDD —
-    * registering the underlying RDD here releases them at drain, so
-    * one query's cut frames cannot pressure the next query's memory
+    * Unlike `cached`, what backs a cut frame is NOT in the SQL cache
+    * (clearCache() cannot see it), and nothing else frees it in time:
+    * local blocks go only when GC + ContextCleaner reach the RDD, and
+    * reliable checkpoint files are never removed (the cleaner leaves
+    * them unless `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is set). So the cut registers its release for this thread's next
+    * [[drain]]: the local blocks are unpersisted, the reliable
+    * checkpoint's `rdd-<id>` directory is deleted. One query's cut
+    * frames cannot then pressure the next query's memory or disk
     * (r16 advice). */
   def cut(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
@@ -79,7 +83,12 @@ object CacheScope {
     out.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         val rdd = l.rdd
-        live.get.add(() => rdd.unpersist(blocking = false))
+        val files = rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_))
+        val conf = sc.hadoopConfiguration
+        live.get.add(() => files match {
+          case Some(dir) => dir.getFileSystem(conf).delete(dir, true)
+          case None => rdd.unpersist(blocking = false)
+        })
       case _ => // not a materialized scan (unexpected); nothing to free
     }
     out

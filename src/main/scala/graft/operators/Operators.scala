@@ -407,7 +407,8 @@ object Operators {
     * takes the distributed path). Every near-dup cluster graph is
     * pairs-of-duplicates sized (≪ corpus); at warehouse scale the
     * graph blows the gate and the distributed loop below runs
-    * untouched. OperatorsSpec pins driver == distributed. */
+    * untouched. OperatorsSpec pins driver == distributed, null ids
+    * included. */
   private[graft] val ccDriverGateRows = 8L * 1024 * 1024
 
   def connectedComponents(edges: DataFrame, src: String, dst: String): DataFrame = {
@@ -417,10 +418,25 @@ object Operators {
     val longIds = und.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
     if (longIds && und.count() <= ccDriverGateRows) {
-      val labeled = ccUnionFind(
-        und.collect().map(r => (r.getLong(0), r.getLong(1))))
+      val rows = und.collect()
       und.unpersist()
-      edges.sparkSession.createDataFrame(labeled).toDF("id", "comp")
+      val spark = edges.sparkSession
+      import spark.implicits._
+      // A null endpoint joins nothing in ccDistributed: its partner
+      // keeps its own component, and the null id itself takes the least
+      // label among the vertices that have it as a neighbor (null if
+      // it has none).
+      val (full, partial) = rows.partition(r => !r.isNullAt(0) && !r.isNullAt(1))
+      val nullNeighbors = partial.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      val labeled = ccUnionFind(full.map(r => (r.getLong(0), r.getLong(1))) ++
+        nullNeighbors.map(v => (v, v)))
+      val out = labeled.toDF("id", "comp")
+      if (partial.isEmpty) out
+      else {
+        val label = labeled.toMap
+        val nullComp = nullNeighbors.map(label).minOption
+        out.union(Seq((Option.empty[Long], nullComp)).toDF("id", "comp"))
+      }
     } else ccDistributed(und)
   }
 

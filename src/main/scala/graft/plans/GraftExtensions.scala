@@ -13,11 +13,23 @@ import graft.functions.expressions.{CharGramCounts, CharGrams, CharShingles, Cos
   *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   *
   *   SELECT minhash_shingles(text, 8, 32) FROM documents
+  *
+  * It also plans as-of joins ([[AsOfJoinStrategy]]) and adds one AQE
+  * query-stage preparation rule, [[ElideTinyShuffles]]: once a
+  * shuffle's whole input is materialized and no larger than the size
+  * AQE's `CoalesceShufflePartitions` would read as a single partition
+  * (`coalescePartitions.minPartitionSize` with `parallelismFirst` on,
+  * else `advisoryPartitionSizeInBytes`), the planner-inserted range or
+  * hash shuffle is replaced by `CoalesceExec(1)`. A short report's
+  * final sort and its small window or grouping-set shuffles then skip
+  * their sampling job and map stage and still end on the one reduce
+  * task AQE would have run; the rows are unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(ElideTinyShuffles)
   }
 }
 

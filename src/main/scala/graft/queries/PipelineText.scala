@@ -1351,7 +1351,8 @@ private[graft] trait PipelineText extends PipelineDedup {
     val wf = bpeWordFreq(docs)
     bpeLocalFitOf(wf, k) match {
       case Some(fit) =>
-        System.err.println(s"[t20] merges=${fit.merges.size} rounds=0 (driver-side fit)")
+        System.err.println(s"[t20] merges=${fit.merges.size} rounds=0 " +
+          s"exhausted=${fit.merges.size < k} mode=driver")
         fit.merges
           .toDF("merge_rank", "left_unit", "right_unit", "merged", "pair_count")
           .orderBy(col("merge_rank"))
@@ -1422,7 +1423,7 @@ private[graft] trait PipelineText extends PipelineDedup {
     // stderr line below is the source of truth for the round count
     // (a log, not shared mutable state: t20/t23/p13 all train, so a
     // var written here would be indeterminate under concurrency)
-    System.err.println(s"[t20] merges=$collected rounds=$rounds exhausted=$exhausted")
+    System.err.println(s"[t20] merges=$collected rounds=$rounds exhausted=$exhausted mode=distributed")
     merges.toSeq
       .toDF("merge_rank", "left_unit", "right_unit", "merged", "pair_count")
       .orderBy(col("merge_rank"))

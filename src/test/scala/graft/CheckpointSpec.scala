@@ -6,7 +6,8 @@ import graft.operators.Operators
 
 /** CacheScope.cut's durability dispatch (r17): localCheckpoint with
   * no checkpoint dir, reliable checkpoint() when the context has one
-  * — same rows either way — and drain() releases the cut blocks. */
+  * — same rows either way — and drain() releases the cut blocks or
+  * deletes the reliable checkpoint files. */
 class CheckpointSpec extends SparkSpec {
   test("cut is local without a checkpoint dir and reliable with one; rows identical") {
     val sc = spark.sparkContext
@@ -14,27 +15,33 @@ class CheckpointSpec extends SparkSpec {
     val df = (1 to 100).toDF("x").withColumn("y", col("x") * 2)
     val localRows = CacheScope.cut(df).as[(Int, Int)].collect().sorted
     assert(localRows.map(_._1).sameElements(1 to 100))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    sc.setCheckpointDir(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    def files(): Long = java.nio.file.Files.walk(dir)
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
+    sc.setCheckpointDir(dir.toString)
     try {
       val rel = CacheScope.cut(df)
       assert(rel.as[(Int, Int)].collect().sorted.sameElements(localRows))
       // the reliable path wrote actual checkpoint files
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "reliable cut should write to the checkpoint dir")
+      assert(files() > 0, "reliable cut should write to the checkpoint dir")
+      CacheScope.drain()
+      assert(files() == 0, "drain should delete the reliable cut's files")
       // a fixpoint operator that cuts every round stays exact under
-      // the reliable path
-      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-      val comps = Operators.connectedComponents(edges, "a_id", "b_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(comps(1L) == comps(2L) && comps(2L) == comps(3L))
-      assert(comps(10L) == comps(11L) && comps(1L) != comps(10L))
+      // the reliable path, and its drain leaves no checkpoint files
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+      val und = edges.union(edges.select(col("b"), col("a"))).toDF("src", "dst").cache()
+      val comps = Operators.ccDistributed(und)
+        .as[(Long, Long)].collect().toMap
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(files() > 0, "ccDistributed should cut through the checkpoint dir")
+      CacheScope.drain()
+      assert(files() == 0, "drain should delete every round's checkpoint")
     } finally {
       // setCheckpointDir is sticky for the JVM; pin the suites that
       // run after this one back to the (pre-spec) local behavior
       spark.conf.set("spark.graft.checkpoint.reliable", "false")
       CacheScope.drain()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 

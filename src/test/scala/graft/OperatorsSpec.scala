@@ -276,6 +276,26 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: driver gate routes null ids exactly as the distributed path") {
+    def cc(edges: Seq[(Option[Long], Option[Long])]): Unit = {
+      val df = edges.toDF("a", "b")
+      val local = Operators.connectedComponents(df, "a", "b")
+        .as[(Option[Long], Option[Long])].collect().toSeq.sorted
+      val und = df.select(col("a"), col("b"))
+        .union(df.select(col("b"), col("a"))).toDF("src", "dst").cache()
+      val dist = Operators.ccDistributed(und)
+        .as[(Option[Long], Option[Long])].collect().toSeq.sorted
+      und.unpersist()
+      assert(local == dist, s"edges $edges")
+    }
+    // nulls next to two components (the null id takes the lesser
+    // label), a vertex seen only beside a null, and a null-null edge
+    cc(Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)), (Some(5L), Some(6L)),
+      (Some(9L), None), (None, None), (Some(10L), Some(11L))))
+    // only null-null edges: the null id is its own, null, label
+    cc(Seq((None, None), (Some(3L), Some(4L))))
+  }
+
   test("validateNormsImport reports every Norms.md:32-36 violation class, one row each") {
     // (assessment_id, line_no, percentile_rank, score, subject)
     val file = Seq(

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -29,32 +28,6 @@ class ReadParquetSpec extends SparkSpec {
 
   private def inputs: Seq[Seq[String]] =
     Tables.all.map(t => Seq(s"$sfDir/$t.parquet")) ++ Seq(Seq(snapshot), bucketDirs)
-
-  /** Jobs that `body` started on this thread. Listener events arrive in
-    * order, so once a later marker job is seen, every job `body`
-    * started has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"rp-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "readParquet under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "the marker job never reached the listener")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("first and cached calls give the schema spark.read.parquet infers") {
     val s = spark.newSession()
